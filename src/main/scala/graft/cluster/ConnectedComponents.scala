@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * in MapReduce and Beyond", SoCC'14) — the clustering step of the near-dup
   * tier (north_rule; no GraphX/RDD per input_hint).
   *
-  * Each operation rewrites the edge set with two shuffles (a per-node min
-  * aggregation + an equi-join back):
+  * Each round runs both operations and rewrites the edge set through three
+  * exchanges: one per-node neighborhood-min window per operation, plus the
+  * terminal dedup (see `round`):
   *
   *   - large-star: every node connects its strictly-larger neighbors to the
   *     minimum of its closed neighborhood — long paths halve;

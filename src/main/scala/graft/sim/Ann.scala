@@ -228,9 +228,8 @@ object Ann {
     * out by cid, a probe's `cid IN (...)` predicate partition-prunes the
     * scan to nProbe of the K lists — the inverted-file read, verified by
     * AnnSpec on the scan's numFiles metric. */
-  def writeIvfIndex(embeddings: DataFrame, dir: String, nLists: Int = 16): Unit = {
-    val scope = new graft.util.PersistScope
-    try {
+  def writeIvfIndex(embeddings: DataFrame, dir: String, nLists: Int = 16): Unit =
+    graft.util.PersistScope.within { scope =>
       val v = scope.persist(
         embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
           .withColumn("nv", dotQ(col("qv"), col("qv"))))
@@ -255,8 +254,7 @@ object Ann {
       Seq((IvfLayoutVersion, nLists))
         .toDF("layout_version", "n_lists")
         .write.mode("overwrite").parquet(s"$dir/meta")
-    } finally scope.release()
-  }
+    }
 
   /** Version tag of the IVF layout contract: centroid rule (fixed-K
     * hash-rank sample), list partitioning, column names. Bump on any change

@@ -33,9 +33,13 @@ import graft.util.PersistScope
   *   4. cold buckets take the plain equi-join.
   *
   * Dropped-bucket logging rides the query itself via `observe` + a
-  * QueryExecutionListener: plan CONSTRUCTION triggers no Spark job (an
-  * earlier eager `head()` here ran the bucket aggregation at composition
-  * time), and the log line appears when the consuming action completes.
+  * QueryExecutionListener, never a separate job (an earlier eager `head()`
+  * here ran the bucket aggregation a second time): the log line appears
+  * when the action that computes the bucket sizes completes. Under a
+  * managed [[PersistScope]] that action is the scope's eager materialization
+  * of the kept-bucket frame, so the sizes — and the log line — come at plan
+  * construction; under [[PersistScope.unmanaged]] the frame is a lazy
+  * persist and they come with the consuming action.
   */
 object Salting {
 
@@ -74,8 +78,8 @@ object Salting {
     *
     * `maxBucket <= 0` disables the cap; `hotThreshold <= 0` salts nothing.
     * The bucket-size aggregate is one narrow shuffle over (keys, count) —
-    * negligible next to the pair join it protects; it persists through
-    * `scope` (the composite operator releases it after materializing).
+    * negligible next to the pair join it protects; it is a `scope` frame
+    * (the composite operator releases it after materializing).
     */
   def bucketPairs(buckets: DataFrame, keyCols: Seq[String], idCol: String,
                   payloadCols: Seq[String], maxBucket: Int,

@@ -7,8 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `Dataset.localCheckpoint(eager = true)` stores every partition in the
   * block manager (MEMORY_AND_DISK) and nothing ever frees them: the SQL
   * cache manager does not track checkpoint RDDs, so `catalog.clearCache()`
-  * is blind to them and the blocks survive until the driver happens to GC
-  * the RDD reference. In a long session that composes many operators (the
+  * and `Dataset.unpersist` are blind to them and the blocks survive until
+  * the JVM happens to GC the RDD reference. Every frame a
+  * [[PersistScope]] hands out is such a checkpoint; its `release` frees
+  * them through [[free]]. In a long session that composes many operators (the
   * bench/verify harnesses run 57 queries x several reps in ONE session, and
   * connected components checkpoints EVERY iteration) the storage pool fills
   * with dead blocks; the unified memory manager cannot evict storage below
@@ -19,10 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Blocks {
 
-  /** Free the blocks behind an eagerly checkpointed frame. After this the
-    * frame is UNUSABLE (lineage is truncated and the blocks are gone) —
-    * call only once every consumer of `df` has materialized. No-op for
-    * plans that contain no checkpoint RDD. */
+  /** Free the blocks behind an eagerly checkpointed frame — every
+    * checkpoint leaf of its plan, so pass the checkpointed frame itself, not
+    * one derived from several. After this the frame is UNUSABLE (lineage is
+    * truncated and the blocks are gone) — call only once every consumer of
+    * `df` has materialized. No-op for plans that contain no checkpoint
+    * RDD. */
   def free(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

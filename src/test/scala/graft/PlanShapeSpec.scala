@@ -231,6 +231,32 @@ class PlanShapeSpec extends SparkSpec {
       "being pushed through the corpus Union again")
   }
 
+  test("near pair pipeline plans over leaves: bounded explain, no nested caches") {
+    // every scope frame must reach the planner as a one-line checkpoint
+    // leaf. A persisted InMemoryRelation carries (and every formatted plan
+    // re-renders) its whole cached plan at each reference, and the near
+    // tier's frames nest — signals inside bucket rows inside the plausible
+    // pairs inside the shingle cache — so one render of the pipeline ran
+    // to hundreds of thousands of lines whatever the data size, and Spark
+    // redoes that render after every AQE stage
+    import org.apache.spark.sql.execution.FormattedMode
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    spark.catalog.clearCache()
+    val cfg = near.NearConfig()
+    util.PersistScope.within { scope =>
+      val reps = scope.persist(near.NearDup.representatives(Tables.corpus(spark, sf), cfg))
+      val pairs = near.NearDup.verifiedPairsOf(reps, cfg, scope)
+      val plan = executedPlan(pairs)
+      val lines = pairs.queryExecution.explainString(FormattedMode).count(_ == '\n')
+      assert(lines <= 3000, s"verifiedPairsOf's formatted plan runs to $lines lines " +
+        "(~200 over checkpoint leaves, ~550k when scope frames nested cached plans)")
+      val nested = collectPlan(plan) { case im: InMemoryTableScanExec =>
+        collectPlan(im.relation.cachedPlan) { case inner: InMemoryTableScanExec => inner }.size
+      }.sum
+      assert(nested == 0, s"$nested cached relation(s) nested inside another in the pair plan")
+    }
+  }
+
   test("repo-root restriction (F5) prunes at the source, not post-scan") {
     // one-file-system roots compile to an isin predicate; on a partitioned
     // layout (repo = Iceberg partition col) this is partition pruning. On
